@@ -153,6 +153,14 @@ _PENDING_NEXT_WINDOW: list[str] = [
     # slots above / in the window).
     "acf_hourly_lags", "anderson_darling_value", "crosscorr_lead_lag",
     "friedman_test_type_day", "ljung_box_hourly", "page_hinkley_hourly",
+    # r17 one dataset memo (dataset_cache.memo replaced the nine module
+    # caches; cosine_topk_bruteforce calls _bcast_query_dots; the graph
+    # loops share copurchase_join_strategy): all 48 flipped queries re-run
+    # oracle-exact at BOTH sf0.01 and sf0.001 (oracle_sim --changed,
+    # 48/48 + 48/48). The other 45 already hold slots above / in the
+    # window.
+    "clustering_coefficient_parts", "degree_assortativity",
+    "ols_price_on_quantity",
 ]
 
 

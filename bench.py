@@ -708,11 +708,12 @@ def graph_trio_scaling_demo(spark, sf_dir: str) -> dict[str, float]:
     copies leave per-copy round trajectories identical to x1, so
     wall(xM)/wall(x1) well under M is the measured per-round scaling
     claim, the same protocol as pagerank_scaling_demo. Warm min-of-2 at
-    every scale. graph10d's edge cache is clear-then-insert (one live
-    entry), so each scale's first call pays that dataset's one-off edge
-    build; a final x1 re-warm run restores the x1 cache entry the
-    extras loop reuses (round-10 ADVICE: the x2 run used to evict it,
-    silently charging the extras-loop kcore/LPA timings one rebuild)."""
+    every scale. graph10d's edge table is memoized per dataset
+    (dataset_cache.memo), so each scale's first call pays that dataset's
+    one-off edge build; a final x1 re-warm run leaves the x1 entry most
+    recently used for the extras loop (round-10 ADVICE: the x2 run once
+    evicted it, silently charging the extras-loop kcore/LPA timings one
+    rebuild)."""
     import shutil
     import tempfile
 
@@ -894,9 +895,9 @@ def triangle_scaling_demo(spark, sf_dir: str) -> dict[str, float]:
     case); cold(x2)/cold(x1) staying near 2 on this graph shows the
     degree-ordered orientation keeps the constant small at doubled m.
 
-    Since round 14 the oriented edge table is a keyed-singleton
-    checkpoint shared across the triangle family, so the SCALING claim
-    is measured on COLD runs (edge cache cleared first — a warm re-run
+    Since round 14 the oriented edge table is a memoized checkpoint
+    shared across the triangle family, so the SCALING claim is measured
+    on COLD runs (dataset_cache cleared first — a warm re-run
     reuses checkpoint blocks and shuffle outputs and times ~0.15 s at
     any scale). The warm numbers are recorded too: triangles_x1 keeps
     its historical meaning (what a second call costs in a live session),
@@ -906,14 +907,13 @@ def triangle_scaling_demo(spark, sf_dir: str) -> dict[str, float]:
 
     from pyspark.sql import functions as F
 
-    from redpanda_iceberg_duckdb_spark.operators.graph12 import (
-        _CO_EDGE_CACHE)
+    from redpanda_iceberg_duckdb_spark import dataset_cache
 
     out: dict[str, float] = {}
     q = all_queries()["clustering_coefficient_parts"]
     q.fn(spark, sf_dir).count()       # JIT/codegen warm-up
     spark.catalog.clearCache()
-    _CO_EDGE_CACHE.clear()
+    dataset_cache.clear()
     t0 = time.perf_counter()
     q.fn(spark, sf_dir).count()
     out["triangles_x1_cold"] = round(time.perf_counter() - t0, 3)
@@ -932,7 +932,7 @@ def triangle_scaling_demo(spark, sf_dir: str) -> dict[str, float]:
     try:
         (li.unionByName(copy.select(*li.columns))
          .write.mode("overwrite").parquet(f"{tmp}/lineitem.parquet"))
-        _CO_EDGE_CACHE.clear()
+        dataset_cache.clear()
         t0 = time.perf_counter()
         q.fn(spark, tmp).count()
         out["triangles_x2_cold"] = round(time.perf_counter() - t0, 3)

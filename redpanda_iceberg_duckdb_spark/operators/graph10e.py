@@ -99,8 +99,7 @@ def sssp_cheapest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per dataset — one count job shared by repeated calls); above the
     # gate the weighted edge table is hash-partitioned by src once and
     # each relaxation round shuffles only the iterate.
-    fp = ("trade_sssp",
-          data_fingerprint(sf_dir, "orders", "lineitem") or sf_dir)
+    fp = ("trade_sssp", data_fingerprint(sf_dir, "orders", "lineitem"))
     e, hint = iterate_join_strategy(
         spark, e, "src", vertex_count(spark, e, "src", fp), fp)
 

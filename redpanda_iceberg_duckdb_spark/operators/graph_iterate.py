@@ -32,11 +32,12 @@ force either path); the 4M default keeps a (long, long) iterate around
 budget, far below executor budgets on a real cluster, and above every
 local-SF vertex count so the driver's bench exercises the broadcast path.
 
-Vertex counts (plain ints, capped dict) and above-gate partitioned edge
-tables (clear-then-insert single live entry, the graph10d._EDGE_CACHE
-convention — the evicted frame is unpersisted) are memoized per
-(applicationId, caller cache key); dataset-fingerprint keyed by the
-caller, never persisted across runs.
+Vertex counts and above-gate partitioned edge layouts are memoized per
+graph name through ``dataset_cache.memo`` (one LRU per name, so two
+graphs taking turns each keep their layout); the caller's cache key
+carries the graph name and its dataset fingerprint. An evicted layout is
+dropped, not unpersisted: Spark's ContextCleaner frees its checkpoint
+blocks once no query holds it.
 """
 
 from __future__ import annotations
@@ -46,12 +47,9 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-_DEFAULT_BOUND = 4_000_000
+from ..dataset_cache import memo
 
-# (applicationId, cache_key) -> vertex count
-_VCOUNT_CACHE: dict[tuple, int] = {}
-# single live entry: {"key": (...), "df": persisted partitioned edges}
-_PART_CACHE: dict[str, object] = {}
+_DEFAULT_BOUND = 4_000_000
 
 
 def broadcast_iterate_bound() -> int:
@@ -62,17 +60,14 @@ def broadcast_iterate_bound() -> int:
 
 
 def vertex_count(spark: SparkSession, edges: DataFrame, key: str,
-                 cache_key: tuple | str) -> int:
+                 cache_key: tuple) -> int:
     """Distinct ``key`` count of the (symmetric) edge table — the iterate
-    row bound — memoized per (application, caller key) so the one count
-    job is paid once per dataset across every query sharing the graph."""
-    ck = (spark.sparkContext.applicationId, cache_key)
-    if ck not in _VCOUNT_CACHE:
-        n = edges.select(key).distinct().count()
-        if len(_VCOUNT_CACHE) >= 64:   # ints only — a loose cap suffices
-            _VCOUNT_CACHE.clear()
-        _VCOUNT_CACHE[ck] = n
-    return _VCOUNT_CACHE[ck]
+    row bound — memoized per (graph name, dataset) ``cache_key`` so the
+    one count job is paid once per dataset across every query sharing the
+    graph."""
+    name, *rest = cache_key
+    return memo(spark, (f"{name}.vertex_count", *rest),
+                lambda: edges.select(key).distinct().count())
 
 
 def _identity(df: DataFrame) -> DataFrame:
@@ -81,7 +76,7 @@ def _identity(df: DataFrame) -> DataFrame:
 
 def iterate_join_strategy(
         spark: SparkSession, edges: DataFrame, key: str, n_iterate: int,
-        cache_key: tuple | str,
+        cache_key: tuple,
 ) -> tuple[DataFrame, Callable[[DataFrame], DataFrame]]:
     """Pick the per-round join strategy for an iterate bounded by
     ``n_iterate`` rows. Returns ``(edges_prepared, hint)``: wrap every
@@ -96,8 +91,8 @@ def iterate_join_strategy(
     """
     if n_iterate <= broadcast_iterate_bound():
         return edges, F.broadcast
-    ck = (spark.sparkContext.applicationId, cache_key, key)
-    if _PART_CACHE.get("key") != ck:
+
+    def build() -> DataFrame:
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # Build the layout with AQE scoped OFF: an AQE-planned repartition
         # materializes through an AdaptiveSparkPlan whose output
@@ -113,10 +108,10 @@ def iterate_join_strategy(
         if prior != "false":
             spark.conf.set(aqe_key, "false")
         try:
-            part = edges.repartition(width, key).localCheckpoint(eager=True)
+            return edges.repartition(width, key).localCheckpoint(eager=True)
         finally:
             if prior != "false":
                 spark.conf.set(aqe_key, prior)
-        _PART_CACHE["key"] = ck
-        _PART_CACHE["df"] = part   # old entry dropped -> RDD GC'd
-    return _PART_CACHE["df"], _identity
+
+    name, *rest = cache_key
+    return memo(spark, (f"{name}.layout", *rest, key), build), _identity

@@ -42,15 +42,16 @@ def test_driver_and_distributed_training_paths_agree(spark, monkeypatch):
     count (same init, same first-minimum tie-break, same mover
     accounting). Force the distributed path by zeroing the sample bound
     and compare against the driver path on the same data."""
+    from redpanda_iceberg_duckdb_spark import dataset_cache
     from redpanda_iceberg_duckdb_spark.operators import pq_train as P
 
     sf = "/root/testdata/sf0.001"
-    P._PQ_TRAIN_CACHE.clear()
+    dataset_cache.clear()
     driver_stats, driver_rounds = P.train_pq_stats(spark, sf)
-    P._PQ_TRAIN_CACHE.clear()
+    dataset_cache.clear()
     monkeypatch.setattr(P, "_DRIVER_TRAIN_BOUND", 0)
     dist_stats, dist_rounds = P.train_pq_stats(spark, sf)
-    P._PQ_TRAIN_CACHE.clear()
+    dataset_cache.clear()
     assert driver_rounds == dist_rounds
     assert [(s, c, n, list(a)) for s, c, n, a in driver_stats] == \
            [(s, c, n, list(a)) for s, c, n, a in dist_stats]

@@ -37,20 +37,24 @@ def test_copurchase_edge_cache_misses_on_data_rewrite(spark, tmp_path):
 
 def test_copurchase_cache_shared_across_triangle_family(spark):
     """clustering_coefficient_parts and edge_triangle_support must draw
-    from the SAME cache entry: after either runs, the cache holds exactly
-    one entry for the dataset and the other query reuses it (identity of
-    the checkpointed frame), so the edge build is paid once per dataset."""
+    from the SAME memo entry: after either runs, the dataset's entry is
+    live and the other query reuses it (identity of the checkpointed
+    frame), so the edge build is paid once per dataset."""
+    from redpanda_iceberg_duckdb_spark.dataset_cache import (
+        data_fingerprint, memo)
     from redpanda_iceberg_duckdb_spark.operators.graph12 import (
-        _CO_EDGE_CACHE, copurchase_oriented_edges)
+        copurchase_oriented_edges)
+
+    def _no_rebuild():
+        raise AssertionError("memo rebuilt a live entry")
 
     sf = "/root/testdata/sf0.001"
     all_queries()["clustering_coefficient_parts"].fn(spark, sf).collect()
-    assert len(_CO_EDGE_CACHE) == 1
-    eo1, _, n1 = copurchase_oriented_edges(spark, sf)
+    eo1, _, n1 = memo(spark, ("copurchase_oriented_edges",
+                              data_fingerprint(sf, "lineitem")), _no_rebuild)
     all_queries()["edge_triangle_support"].fn(spark, sf).collect()
     eo2, _, n2 = copurchase_oriented_edges(spark, sf)
     assert eo1 is eo2 and n1 == n2
-    assert len(_CO_EDGE_CACHE) == 1
 
 
 def test_wav_stream_dead_letters_malformed_payloads(spark, tmp_path):

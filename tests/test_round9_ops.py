@@ -88,25 +88,34 @@ def test_f9_fixture_regeneration_is_stable(tmp_path):
 
 
 def test_dataset_keyed_caches_do_not_cross_contaminate(spark):
-    """graphrank's edge cache and quantizer_train's assignment cache key on
-    (applicationId, sf_dir) and hold at most ONE entry. Running against two
-    different datasets back-to-back must (a) give each dataset its own
-    correct result — no stale reuse — and (b) leave exactly one cache
-    entry (bounded memory, the deliberate non-leak)."""
+    """graphrank's edge table is memoized per (application, dataset
+    fingerprint). Running against two different datasets back-to-back
+    must (a) give each dataset its own correct result — no stale reuse —
+    and (b) keep one live entry per dataset: returning to the first
+    dataset serves that dataset's entry (the same checkpointed frame, no
+    rebuild) with identical rows."""
+    from redpanda_iceberg_duckdb_spark.dataset_cache import (
+        data_fingerprint, memo)
     from redpanda_iceberg_duckdb_spark.operators import graphrank
 
+    def _no_rebuild():
+        raise AssertionError("memo rebuilt a live entry")
+
+    small, big = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
     qs = all_queries()
-    a = qs["pagerank_trade_graph"].fn(spark, "/root/testdata/sf0.001")
+    a = qs["pagerank_trade_graph"].fn(spark, small)
     rows_a = [tuple(r) for r in a.collect()]
-    assert len(graphrank._EDGE_CACHE) == 1
-    b = qs["pagerank_trade_graph"].fn(spark, "/root/testdata/sf0.01")
+    edges_a = memo(spark, ("trade_edges",
+                           data_fingerprint(small, "orders", "lineitem")),
+                   _no_rebuild)
+    b = qs["pagerank_trade_graph"].fn(spark, big)
     rows_b = [tuple(r) for r in b.collect()]
-    assert len(graphrank._EDGE_CACHE) == 1   # clear-then-insert, bounded
     assert rows_a != rows_b                  # no stale cross-dataset reuse
-    # back to the first dataset: rebuilt (not served stale) and identical
+    assert graphrank._edges_with_deg(spark, big) is not edges_a
+    # back to the first dataset: its entry is served, rows identical
+    assert graphrank._edges_with_deg(spark, small) is edges_a
     rows_a2 = [tuple(r) for r in
-               qs["pagerank_trade_graph"].fn(
-                   spark, "/root/testdata/sf0.001").collect()]
+               qs["pagerank_trade_graph"].fn(spark, small).collect()]
     assert rows_a2 == rows_a
 
 
